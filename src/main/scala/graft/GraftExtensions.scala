@@ -5,46 +5,47 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point: injects the engine's native
-  * Catalyst functions into every session built with
+  * Catalyst functions and optimizer rule into every session built with
   * `.withExtensions(new GraftExtensions)` or via
   * `spark.sql.extensions=graft.GraftExtensions` — the deployment path for
-  * spark-submit clusters where builder code isn't ours to edit. Must stay
-  * in lockstep with [[graft.core.Normalize.register]] (the builder-code
-  * path): every call_function name used by the library is injected here.
+  * spark-submit clusters where builder code isn't ours to edit. Reads the
+  * same table as [[graft.core.Normalize.register]] (the builder-code
+  * path), so the two paths cannot drift.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def inject(ext: SparkSessionExtensions, name: String,
-                     build: Seq[Expression] => Expression,
-                     exprClass: Class[_]): Unit =
-    ext.injectFunction((FunctionIdentifier(name),
-      new ExpressionInfo(exprClass.getName, name), build))
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    import graft.core.{Normalize, NtCodec}
-    inject(ext, "alias_key", es => Normalize.AliasKeyExpr(es.head),
-           classOf[Normalize.AliasKeyExpr])
-    inject(ext, "canonical_label",
-           es => Normalize.CanonicalLabelExpr(es.head),
-           classOf[Normalize.CanonicalLabelExpr])
-    inject(ext, "plural_lexhead",
-           es => Normalize.PluralLexheadExpr(es.head),
-           classOf[Normalize.PluralLexheadExpr])
-    inject(ext, "nt_encode_resource",
-           es => NtCodec.NtEncodeResourceExpr(es.head),
-           classOf[NtCodec.NtEncodeResourceExpr])
-    inject(ext, "nt_escape_literal",
-           es => NtCodec.NtEscapeLiteralExpr(es.head),
-           classOf[NtCodec.NtEscapeLiteralExpr])
-    inject(ext, "nt_decode_resource",
-           es => NtCodec.NtDecodeResourceExpr(es.head),
-           classOf[NtCodec.NtDecodeResourceExpr])
-    inject(ext, "nt_unescape_literal",
-           es => NtCodec.NtUnescapeLiteralExpr(es.head),
-           classOf[NtCodec.NtUnescapeLiteralExpr])
-    inject(ext, "html_to_text",
-           es => graft.ingest.TextExtract.HtmlToTextExpr(es.head),
-           classOf[graft.ingest.TextExtract.HtmlToTextExpr])
+    GraftExtensions.Functions.foreach { case (name, build, exprClass) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(exprClass.getName, name), build))
+    }
     ext.injectOptimizerRule(_ => graft.plans.IdempotentAliasKey)
   }
+}
+
+object GraftExtensions {
+  import graft.core.{Normalize, NtCodec}
+  import graft.functions.VectorOps
+  import graft.ingest.TextExtract
+
+  /** Every native function the library calls by name (`call_function`):
+    * (SQL name, builder, expression class). The one function table. */
+  val Functions: Seq[(String, Seq[Expression] => Expression, Class[_])] = Seq(
+    ("alias_key", es => Normalize.AliasKeyExpr(es.head),
+     classOf[Normalize.AliasKeyExpr]),
+    ("canonical_label", es => Normalize.CanonicalLabelExpr(es.head),
+     classOf[Normalize.CanonicalLabelExpr]),
+    ("plural_lexhead", es => Normalize.PluralLexheadExpr(es.head),
+     classOf[Normalize.PluralLexheadExpr]),
+    ("nt_encode_resource", es => NtCodec.NtEncodeResourceExpr(es.head),
+     classOf[NtCodec.NtEncodeResourceExpr]),
+    ("nt_escape_literal", es => NtCodec.NtEscapeLiteralExpr(es.head),
+     classOf[NtCodec.NtEscapeLiteralExpr]),
+    ("nt_decode_resource", es => NtCodec.NtDecodeResourceExpr(es.head),
+     classOf[NtCodec.NtDecodeResourceExpr]),
+    ("nt_unescape_literal", es => NtCodec.NtUnescapeLiteralExpr(es.head),
+     classOf[NtCodec.NtUnescapeLiteralExpr]),
+    ("html_to_text", es => TextExtract.HtmlToTextExpr(es.head),
+     classOf[TextExtract.HtmlToTextExpr]),
+    ("vec_dot", es => VectorOps.DotExpr(es(0), es(1)),
+     classOf[VectorOps.DotExpr]))
 }

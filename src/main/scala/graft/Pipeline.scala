@@ -115,8 +115,9 @@ object Pipeline {
 
   /** Above this row count a delta key set stops being broadcast-hinted and
     * the carry joins degrade to AQE-planned shuffle joins (high-churn
-    * re-crawls must not OOM the driver on a forced broadcast — SCALE.md's
-    * url-bucketed shape takes over well before this at real scale). */
+    * re-crawls must not OOM the driver on a forced broadcast). This is the
+    * one carry layout at every churn: a broadcast anti-join while the drop
+    * set is under the threshold, a shuffle anti-join above it. */
   val MaxBroadcastKeys = 2000000L
 
   /** Run (or resume) the full pipeline; returns the triple table.
@@ -139,8 +140,7 @@ object Pipeline {
     runner.run("seeds_fp") { seedsFingerprint(spark, seeds) }
 
     // 1. invariant text extraction (byte-identical per url)
-    val pagesText =
-      runner.runKeyed("pages_text", Seq("url")) { TextExtract.extract(pages) }
+    val pagesText = runner.run("pages_text") { TextExtract.extract(pages) }
 
     // 2. listings → items → subject mentions
     val mentions = runner.run("mentions") { ListingExtract.mentions(pagesText) }
@@ -155,16 +155,14 @@ object Pipeline {
     // resumes by name — a stale "linked" checkpoint must never resume into
     // the new shape (it would silently empty the NIL path).
     val linkedAll =
-      runner.runKeyed("linked_all", Seq("url")) { AliasLink.linkAll(mentions, dict) }
+      runner.run("linked_all") { AliasLink.linkAll(mentions, dict) }
 
     // 1b. corpus hypernym mining over page prose (A5/N9 — Hearst patterns),
     // checkpointed per url first: the url-keyed table is the materialized
     // view [[runDelta]] maintains with a url-keyed row drop instead of
     // re-parsing dropped prose; the global aggregate is its rollup.
     val hypByUrl =
-      runner.runKeyed("hypernyms_by_url", Seq("url")) {
-        hearstCountsByUrl(pagesText)
-      }
+      runner.run("hypernyms_by_url") { hearstCountsByUrl(pagesText) }
     runner.run("hypernyms") {
       hypByUrl.groupBy("sub", "obj").agg(sum("cnt").as("cnt"))
     }
@@ -246,7 +244,7 @@ object Pipeline {
     def canonFpReady: Boolean =
       StageRunner.completed(prevDir, "graph_canon_fp") && {
         val cur = canonFpOf(spark, canon)
-        val prev = spark.read.parquet(s"$prevDir/graph_canon_fp")
+        val prev = prevStage(spark, prevDir, "graph_canon_fp")
           .collect().map(r => r.getString(0) -> r.getString(1)).toMap
         !cur.exists(_._2 == "custom_fn") && prev == cur.toMap
       }
@@ -281,7 +279,7 @@ object Pipeline {
     // seed input — at scale this halves the delta's seed-scan bill)
     locally {
       val curFpDf = seedsFingerprint(spark, seeds).localCheckpoint()
-      val prevFp = spark.read.parquet(s"$prevDir/seeds_fp")
+      val prevFp = prevStage(spark, prevDir, "seeds_fp")
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val curFp = curFpDf.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       // a FORMAT change is not a seed change: report it as such instead of
@@ -299,10 +297,10 @@ object Pipeline {
               "would be stale; run full on a fresh outDir instead")
       runner.run("seeds_fp") { curFpDf }
     }
-    val prevManifest = spark.read.parquet(s"$prevDir/crawl_manifest")
+    val prevManifest = prevStage(spark, prevDir, "crawl_manifest")
     // carried url-keyed tables resolve through their layer chain (a prevDir
     // that is itself a delta outDir holds LAYERS, not materialized tables)
-    val prevLinked = StageRunner.read(spark, s"$prevDir/linked_all")
+    val prevLinked = prevStage(spark, prevDir, "linked_all")
 
     val manifest = runner.run("crawl_manifest") { manifestOf(newPages) }
     // The join must be keyed by the SMALL side — the delta, not the corpus.
@@ -312,9 +310,7 @@ object Pipeline {
     // instead would shuffle the whole corpus twice and cost more than the
     // full run it replaces (measured — see BENCH/BASELINE.md). The
     // broadcast hint is guarded: above [[MaxBroadcastKeys]] (a high-churn
-    // re-crawl) the hint is dropped and AQE plans the join. At 10^12 docs,
-    // where even 1% outgrows a broadcast, the same shape holds with
-    // url-bucketed checkpoint tables (SCALE.md).
+    // re-crawl) the hint is dropped and AQE plans a shuffle join instead.
     //
     // A url is TOUCHED when its capture set changed in either direction:
     // new/changed captures (manifest ∖ prev) or vanished captures
@@ -364,13 +360,13 @@ object Pipeline {
     // maintenance cost is 1× the churn, not 2×). Pairs whose count cancels
     // to 0 drop out, so the result is EXACTLY the full-run aggregate
     // (asserted by DeltaSpec).
-    val prevHypByUrl = StageRunner.read(spark, s"$prevDir/hypernyms_by_url")
+    val prevHypByUrl = prevStage(spark, prevDir, "hypernyms_by_url")
     val freshHypByUrl =
       runner.run("hypernyms_by_url_fresh") { hearstCountsByUrl(freshText) }
     runner.runCarried("hypernyms_by_url", prevDir, Seq("url"), dropUrls,
                       s"$outDir/hypernyms_by_url_fresh")
     runner.run("hypernyms") {
-      val prevHyp = spark.read.parquet(s"$prevDir/hypernyms")
+      val prevHyp = prevStage(spark, prevDir, "hypernyms")
       val minus = prevHypByUrl.join(dropUrls, Seq("url"), "left_semi")
         .groupBy("sub", "obj").agg(sum("cnt").as("cnt"))
       val plus = freshHypByUrl
@@ -492,6 +488,12 @@ object Pipeline {
     graft.mine.Hearst.corpusCountsByUrl(
       pages.select("url", "text").as[(String, String)])
   }
+
+  /** Stage `stage` of the previous run in `prevDir`, carry layers resolved
+    * — the one way a delta reads its parent run. */
+  private def prevStage(spark: SparkSession, prevDir: String,
+                        stage: String): DataFrame =
+    StageRunner.read(spark, s"$prevDir/$stage")
 
   /** Broadcast-hint a delta key set only while it is actually small
     * (ADVICE r3: an unconditional hint OOMs on high-churn re-crawls);
@@ -731,7 +733,7 @@ object Pipeline {
         val nilAssign = runner.run("nil_entities", report = nilRep) {
           NilCluster.cluster(keptUnlinked, nilRep)
         }
-        runner.runKeyed("subjects", Seq("url")) {
+        runner.run("subjects") {
           componentsSubjects(linked, keptUnlinked, nilAssign)
         }
       case ed: Canonicalization.ScoredEd =>
@@ -776,13 +778,13 @@ object Pipeline {
     // (both rule miners, both candidate counts, provenance) — checkpoint it
     // once instead of paying the corpus-wide distinct shuffle per consumer
     val seedTypes = seeds.entityTypes.select(col("ent"), col("tpe"))
-    val subjectListings = runner.runKeyed("subject_listings", Seq("url")) {
+    val subjectListings = runner.run("subject_listings") {
       subjects.select("url", "listing_key", "ent").distinct()
     }
-    val typeRules = runner.runKeyed("type_rules", Seq("url")) {
+    val typeRules = runner.run("type_rules") {
       RuleMining.listingTypeRules(subjectListings, seedTypes)
     }
-    val relationRules = runner.runKeyed("relation_rules", Seq("url")) {
+    val relationRules = runner.run("relation_rules") {
       RuleMining.listingRelationRules(subjectListings, seeds.seedRelations)
     }
     val labelCounts = runner.run("label_counts") { labelCountsOf(subjects) }
@@ -800,7 +802,7 @@ object Pipeline {
     val relCandCounts = runner.run("rel_cand_counts") {
       relCandCountsOf(subjectListings, relationRules)
     }
-    val provPairs = runner.runKeyed("prov_pairs", Seq("url")) {
+    val provPairs = runner.run("prov_pairs") {
       provPairsOf(subjectListings, typeRules)
     }
     emitStages(spark, runner,
@@ -836,9 +838,7 @@ object Pipeline {
                               linkedAll: DataFrame, linkedFresh: DataFrame,
                               prevLinked: DataFrame, seeds: Seeds,
                               subjectsStage: String): Flips = {
-    def prev(stage: String): DataFrame =
-      spark.read.parquet(s"$prevDir/$stage")
-    val prevUnlCounts = prev("unlinked_label_counts")
+    val prevUnlCounts = prevStage(spark, prevDir, "unlinked_label_counts")
 
     // F9 counts maintenance: minus = dropped urls' unlinked labels (from
     // the carried linked_all view), plus = fresh slice's unlinked labels
@@ -872,20 +872,21 @@ object Pipeline {
           .join(dropUrls, Seq("url"), "left_semi"), seedTypes)
       val plus = tagStatsOf(linkedFresh.filter(col("ent").isNotNull),
                             seedTypes)
-      maintainCounts(prev("tag_stats"), minus, plus, Seq("tpe", "tag"))
+      maintainCounts(prevStage(spark, prevDir, "tag_stats"), minus, plus,
+                     Seq("tpe", "tag"))
     }
     val validNew = runner.run("valid_tags") {
       graft.taxonomy.ValidTags.validTagsFromStats(tagStats,
                                                   seeds.taxonomyEdges)
     }
-    val validPrev = prev("valid_tags")
+    val validPrev = prevStage(spark, prevDir, "valid_tags")
     val flippedTags = fresh(validNew).unionByName(fresh(validPrev))
       .groupBy("tpe", "tag").agg(count(lit(1)).as("c"))
       .filter(col("c") === 1).select("tpe", "tag")
       .localCheckpoint()
 
-    val prevSubjects = StageRunner.read(spark, s"$prevDir/$subjectsStage")
-    val prevTypeRules = StageRunner.read(spark, s"$prevDir/type_rules")
+    val prevSubjects = prevStage(spark, prevDir, subjectsStage)
+    val prevTypeRules = prevStage(spark, prevDir, "type_rules")
     val f9FlipUrls =
       if (flipped.isEmpty) None
       else Some(linkedAll.filter(col("ent").isNull)
@@ -1077,7 +1078,7 @@ object Pipeline {
     val subjects = runner.run(mode.subjectsStage, report = rep) {
       computed._1
     }
-    runner.runKeyed(mode.compsStage, Seq("comp")) { computed._2 }
+    runner.run(mode.compsStage) { computed._2 }
     runner.run(mode.keyCountsStage) {
       AlignmentGraph.graphMentions(subjects.select("mention_id", "label"))
         .groupBy("key").agg(count(lit(1)).as("cnt"))
@@ -1158,12 +1159,10 @@ object Pipeline {
     val flips = deltaFlipStages(spark, runner, prevDir, dropUrls, linkedAll,
                                 linkedFresh, prevLinked, seeds,
                                 mode.subjectsStage)
-    def prev(stage: String): DataFrame =
-      spark.read.parquet(s"$prevDir/$stage")
-    val prevComps = StageRunner.read(spark, s"$prevDir/${mode.compsStage}")
+    val prevComps = prevStage(spark, prevDir, mode.compsStage)
       .localCheckpoint()
     val prevCompMentions = prevComps.filter(col("mention_id").isNotNull)
-    val prevKeyCounts = prev(mode.keyCountsStage)
+    val prevKeyCounts = prevStage(spark, prevDir, mode.keyCountsStage)
 
     // — graph-membership deltas —
     val leaverLabels = flips.flippedLabels
@@ -1317,10 +1316,6 @@ object Pipeline {
                               prevDir: String, affectedUrls: DataFrame,
                               subjectsA: DataFrame, prevSubjectsA: DataFrame,
                               seeds: Seeds, flips: Flips): DataFrame = {
-    def prev(stage: String): DataFrame =
-      spark.read.parquet(s"$prevDir/$stage")
-    def prevCarried(stage: String): DataFrame =
-      StageRunner.read(spark, s"$prevDir/$stage")
     val seedTypes = seeds.entityTypes.select(col("ent"), col("tpe"))
     // the layered type_rules parent was already resolved for the tag-flip
     // probe — reuse it instead of re-executing the layer chain
@@ -1329,11 +1324,12 @@ object Pipeline {
     val validPrev = flips.validPrev
 
     val labelCounts = runner.run("label_counts") {
-      maintainCounts(prev("label_counts"), labelCountsOf(prevSubjectsA),
-                     labelCountsOf(subjectsA), Seq("ent", "label"))
+      maintainCounts(prevStage(spark, prevDir, "label_counts"),
+                     labelCountsOf(prevSubjectsA), labelCountsOf(subjectsA),
+                     Seq("ent", "label"))
     }
 
-    val prevSubjList = prevCarried("subject_listings")
+    val prevSubjList = prevStage(spark, prevDir, "subject_listings")
     val subjListA = runner.run("subject_listings_fresh") {
       subjectsA.select("url", "listing_key", "ent").distinct()
     }
@@ -1347,7 +1343,7 @@ object Pipeline {
     val typeRules = runner.runCarried("type_rules", prevDir, Seq("url"),
                                       affectedUrls,
                                       runner.pathOf("type_rules_fresh"))
-    val prevRelRules = prevCarried("relation_rules")
+    val prevRelRules = prevStage(spark, prevDir, "relation_rules")
     val relRulesA = runner.run("relation_rules_fresh") {
       RuleMining.listingRelationRules(subjListA, seeds.seedRelations)
     }
@@ -1370,16 +1366,16 @@ object Pipeline {
       // minus under the PREVIOUS validity (what the recorded view
       // contains), plus under the new one; validity flips on untouched
       // urls are covered by the affected-set widening above
-      maintainCounts(prev("type_cand_counts"), typeMinusSlice,
-                     typePlusSlice, Seq("ent", "tpe"))
+      maintainCounts(prevStage(spark, prevDir, "type_cand_counts"),
+                     typeMinusSlice, typePlusSlice, Seq("ent", "tpe"))
     }
     val relMinusSlice =
       relCandCountsOf(prevSubjListA, prevRelRulesA).localCheckpoint()
     val relPlusSlice =
       relCandCountsOf(subjListA, relRulesA).localCheckpoint()
     val relCandCounts = runner.run("rel_cand_counts") {
-      maintainCounts(prev("rel_cand_counts"), relMinusSlice, relPlusSlice,
-                     Seq("ent", "pred", "obj"))
+      maintainCounts(prevStage(spark, prevDir, "rel_cand_counts"),
+                     relMinusSlice, relPlusSlice, Seq("ent", "pred", "obj"))
     }
     val touchedTypeEnts = hintSmall(
       typeMinusSlice.select("ent").unionByName(typePlusSlice.select("ent"))
@@ -1461,7 +1457,7 @@ object Pipeline {
     // every join in the fresh slice is broadcast-sized.
     val types = carry match {
       case None =>
-        runner.runKeyed("types", Seq("ent"), report = closRep) {
+        runner.run("types", report = closRep) {
           typesOf(m.typeCandCounts, seedTypes)
         }
       case Some(c) =>
@@ -1476,7 +1472,7 @@ object Pipeline {
 
     val relations = carry match {
       case None =>
-        runner.runKeyed("relations", Seq("ent")) {
+        runner.run("relations") {
           relationsOf(m.relCandCounts, seeds.seedRelations)
         }
       case Some(c) =>
@@ -1531,12 +1527,11 @@ object Pipeline {
     // serialize.py:231-239; ONTOLOGY-CLASS — every mined type
     // wasDerivedFrom the listings whose rule asserted it,
     // serialize.py:158-164). obj = the page url, so the table is url-keyed
-    // and carries like every other url-keyed stage: a full run writes it
-    // keyed (bucket-layout-capable), a delta run writes ONLY the affected
-    // slice as a layer over the parent's partition.
+    // and carries like every other url-keyed stage: a delta run writes
+    // ONLY the affected slice as a layer over the parent's partition.
     val provTrips = carry match {
       case None =>
-        runner.runKeyed("triples_prov", Seq("obj")) {
+        runner.run("triples_prov") {
           TripleEmit.provenanceTriples(m.provPairs)
         }
       case Some(pc) =>

@@ -75,35 +75,18 @@ object Normalize {
   def aliasKeyJava(s: String): String = AliasKeyExpr.key(s)
 
   /** Register the native expressions in the session's function registry
-    * (idempotent; the public way to splice a custom Expression into plans). */
+    * and add the [[graft.plans.IdempotentAliasKey]] rule to the session's
+    * extra optimizations (idempotent; the builder-code twin of
+    * [[graft.GraftExtensions]], reading the same table). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = castToImpl(spark).sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "alias_key", exprs => AliasKeyExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "nt_encode_resource",
-      exprs => NtCodec.NtEncodeResourceExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "nt_escape_literal",
-      exprs => NtCodec.NtEscapeLiteralExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "canonical_label", exprs => CanonicalLabelExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "nt_decode_resource",
-      exprs => NtCodec.NtDecodeResourceExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "nt_unescape_literal",
-      exprs => NtCodec.NtUnescapeLiteralExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "plural_lexhead", exprs => PluralLexheadExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "html_to_text",
-      exprs => graft.ingest.TextExtract.HtmlToTextExpr(exprs.head),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "vec_dot",
-      exprs => graft.functions.VectorOps.DotExpr(exprs.head, exprs(1)),
-      "built-in")
+    val session = castToImpl(spark)
+    val reg = session.sessionState.functionRegistry
+    graft.GraftExtensions.Functions.foreach { case (name, build, _) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
+    val rule = graft.plans.IdempotentAliasKey
+    if (!session.experimental.extraOptimizations.contains(rule))
+      session.experimental.extraOptimizations :+= rule
   }
 
   /** Column wrapper for the native expression. Requires [[register]] to have

@@ -12,7 +12,7 @@ import graft.core.Normalize.AliasKeyExpr
   * upstream views that already normalized (e.g. a pre-keyed dictionary
   * joined by a generic key expression). Plan-level, so it fires regardless
   * of which API produced the expression. Injected by
-  * [[graft.GraftExtensions]].
+  * [[graft.GraftExtensions]] and added by [[graft.core.Normalize.register]].
   */
 object IdempotentAliasKey extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =

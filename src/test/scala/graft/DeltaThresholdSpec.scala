@@ -242,69 +242,4 @@ class DeltaThresholdSpec extends SparkSuite {
     try run3(v1, v2, "graft-nohint")
     finally spark.conf.unset("graft.delta.maxBroadcastKeys")
   }
-
-  test("url-bucketed carry: bucket-pruned layer drops stay result-identical " +
-       "with every broadcast disabled (SCALE.md's 10^12-doc shape)") {
-    // graft.delta.bucketedCarry lays carryable checkpoints out in key-hash
-    // bucket directories; layer resolution then splits the parent on the
-    // touched BUCKET IDS instead of broadcasting the dropped-key set —
-    // with maxBroadcastKeys=0 on top, NO delta join anywhere may broadcast,
-    // which is exactly the > MaxBroadcastKeys re-crawl regime.
-    val v2 = world.pages
-    val touched = world.pages.find(_.url.contains("list-of-artists")).get.url
-    val v1 = v2.map { p =>
-      if (p.url == touched)
-        p.copy(warc_ts = new java.sql.Timestamp(p.warc_ts.getTime - 5L))
-      else p
-    }
-    spark.conf.set("graft.delta.bucketedCarry", "true")
-    spark.conf.set("graft.delta.carryBuckets", "8")
-    spark.conf.set("graft.delta.maxBroadcastKeys", "0")
-    try {
-      val (_, outDir) = run3(v1, v2, "graft-bucketed")
-      // the carried layer's drops really went through the bucket layout
-      // (prune evidence: bucketed drop dirs + the recorded bucket count)
-      val dropsDir = java.nio.file.Paths.get(s"$outDir/pages_text/_layer_drops")
-      assert(java.nio.file.Files.exists(dropsDir), "layer drops missing")
-      val kbDirs = java.nio.file.Files.list(dropsDir).iterator()
-      val hasBuckets = Iterator.continually(kbDirs)
-        .takeWhile(_.hasNext).map(_.next().getFileName.toString)
-        .exists(_.startsWith("_kb="))
-      assert(hasBuckets, "drops were not written into the bucket layout")
-      // the layer's recorded parent (the full run's checkpoint) carries the
-      // bucket-count marker the drops were aligned to
-      val meta = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$outDir/pages_text/_layer")))
-      val parent = meta.linesIterator.find(_.startsWith("parent="))
-        .get.stripPrefix("parent=")
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(parent, "_buckets")),
-        "materialized root lacks the bucket-count marker")
-    } finally {
-      spark.conf.unset("graft.delta.bucketedCarry")
-      spark.conf.unset("graft.delta.carryBuckets")
-      spark.conf.unset("graft.delta.maxBroadcastKeys")
-    }
-  }
-
-  test("url-bucketed carry survives an EMPTY drop set (no-change re-crawl)") {
-    // dynamic-partition writers create files lazily: an empty bucketed
-    // drop frame used to leave a data-less _layer_drops directory and the
-    // immediate read-back died with "Unable to infer schema". A no-change
-    // re-crawl (every carried stage drops nothing) is the smallest such
-    // delta — it must resolve and stay triple-identical.
-    val v2 = world.pages
-    spark.conf.set("graft.delta.bucketedCarry", "true")
-    spark.conf.set("graft.delta.carryBuckets", "8")
-    try {
-      val (delta, outDir) = run3(v2, v2, "graft-bucketed-noop")
-      assert(delta.count() > 0)
-      // the carried layer (with its empty bucketed drop table) resolves
-      assert(graft.runtime.StageRunner
-        .read(spark, s"$outDir/pages_text").count() > 0)
-    } finally {
-      spark.conf.unset("graft.delta.bucketedCarry")
-      spark.conf.unset("graft.delta.carryBuckets")
-    }
-  }
 }

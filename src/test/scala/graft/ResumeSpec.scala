@@ -100,4 +100,39 @@ class ResumeSpec extends SparkSuite {
       .count()
     assert(rep.rounds >= 1 && rep.converged, s"(${rep.rounds}, ${rep.converged})")
   }
+
+  test("lineage appends commit by rename: no temp file left, a torn one ignored") {
+    import graft.runtime.StageRunner
+    val dir = SparkSuite.tempDir("graft-lin-commit")
+    val r = new StageRunner(spark, dir, "t")
+    (1 to 3).foreach(i => r.run(s"s$i") { Seq(i).toDF("v") })
+    val linDir = new java.io.File(s"$dir/_lineage")
+    def names = linDir.listFiles().map(_.getName).toSeq
+    assert(!names.exists(_.startsWith("_")), s"temp files left: $names")
+    assert(names.count(_.endsWith(".parquet")) == 3, names)
+    // a write torn by a crash leaves only a `_`-prefixed temp file behind
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$dir/_lineage/_lineage-torn.snappy.parquet"),
+      "PAR1 truncated".getBytes("UTF-8"))
+    val lin = r.lineage().select("stage", "rows_out").as[(String, Long)]
+      .collect().toMap
+    assert(lin == Map("s1" -> 1L, "s2" -> 1L, "s3" -> 1L))
+  }
+
+  test("a null partition value takes the groupBy fallback with exact counts") {
+    import graft.runtime.StageRunner
+    val dir = SparkSuite.tempDir("graft-null-part")
+    val r = new StageRunner(spark, dir, "t")
+    r.runPartitioned("tp", "pred") {
+      Seq(("a", "p1"), ("b", "p1"), ("c", null), ("d", "p:2"))
+        .toDF("subj", "pred")
+    }
+    // the null value lands in the default partition the footers can't name
+    assert(new java.io.File(s"$dir/tp/pred=__HIVE_DEFAULT_PARTITION__")
+      .isDirectory)
+    val lin = r.lineage().select("stage", "rows_out").as[(String, Long)]
+      .collect().toMap
+    assert(lin == Map("tp/pred=p1" -> 2L, "tp/pred=null" -> 1L,
+                      "tp/pred=p:2" -> 1L, "tp" -> 4L), lin)
+  }
 }

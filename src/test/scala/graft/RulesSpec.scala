@@ -43,4 +43,21 @@ class RulesSpec extends SparkSuite {
       .select(Normalize.aliasKey(col("source")))
     assert(countAliasKey(df) == 1)
   }
+
+  test("extensions alone resolve every function in the shared table") {
+    // newSession() carries the session extensions but not register's temp
+    // functions: this is a session set up only through spark.sql.extensions
+    val s2 = spark.newSession()
+    val missing = GraftExtensions.Functions.map(_._1)
+      .filterNot(n => s2.catalog.functionExists(n))
+    assert(missing.isEmpty, s"not injected by GraftExtensions: $missing")
+    val dot = s2.sql("select vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))")
+    assert(dot.head().getDouble(0) == 11.0)
+    // register adds the rule for register-only sessions, exactly once
+    Normalize.register(s2)
+    Normalize.register(s2)
+    val rules = org.apache.spark.sql.classic.ClassicConversions
+      .castToImpl(s2).experimental.extraOptimizations
+    assert(rules.count(_ eq graft.plans.IdempotentAliasKey) == 1, rules)
+  }
 }
